@@ -78,6 +78,22 @@ def build_session(
             "org.apache.spark.sql.catalyst.optimizer."
             "InferFiltersFromGenerate",
         )
+        # Spark caches the classes it generates and compiles with
+        # Janino (about 4.5 ms each), but by default only 100 of them,
+        # fewer than any warm working set here, so every warm pass
+        # recompiled the same classes. Measured with perfbench on 4
+        # cores: a cold pass generates about 485 distinct classes on
+        # `curation`, 205 on `relational` and 140 on `ingest_mixed`,
+        # and under the default bound each warm pass recompiled
+        # 520-550, 150-200 and 90-120 of them. The 103 bench.py
+        # headliners generate 2,001 distinct classes in one session at
+        # sf0.01; 4096 holds all of them with room for other queries.
+        # The bound is a static conf, read once per JVM, so it is a
+        # constant here, not an option: an unused entry costs nothing,
+        # and a full cache only evicts. 0 would disable the cache, and
+        # no bound would let a long-lived session of ad-hoc SQL grow
+        # metaspace without limit.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
